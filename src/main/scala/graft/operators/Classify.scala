@@ -65,6 +65,16 @@ final class CacheJoinClassifier(cache: DataFrame, onMiss: AnswerClassifier)
   }
 }
 
+/** A label table classified ahead of the join — (industry, question, answer,
+  * sentiment, category) holding every key the joined frame can ask for, as
+  * SurveyMain's written-ahead cache does. `classify` serves the table as is
+  * and never reads `keys`; it may return labels for other keys too, which a
+  * left join back onto the keys ignores. So the joined plan reads the
+  * table, not a second copy of the keys' source. */
+final class LabelTable(labels: DataFrame) extends AnswerClassifier {
+  override def classify(keys: DataFrame): DataFrame = labels
+}
+
 /** Executor-side batched remote classifier — the Spark analog of the
   * reference's OpenAI path (survey_analysis.py:171-217), kept behind a
   * transport function so it is testable offline and deterministic.

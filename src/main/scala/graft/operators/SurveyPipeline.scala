@@ -43,6 +43,15 @@ object SurveyPipeline {
     order.toSeq
   }
 
+  /** O7 — the distinct classification keys (industry, question, cleaned
+    * answer) of the question columns `qcols`, in one scan of `df`: each row
+    * explodes into one (question, answer) struct per column. */
+  def answerKeys(df: DataFrame, industry: String, qcols: Seq[String]): DataFrame =
+    df.select(explode(array(qcols.map(q =>
+        struct(lit(q).as("question"), TextExprs.cleanText(col(q)).as("answer"))): _*)).as("k"))
+      .select(lit(industry).as("industry"), col("k.question"), col("k.answer"))
+      .distinct()
+
   /** O4 — first non-null, non-blank sample answer per question column (the
     * reference's language-probe diagnostic, survey_analysis.py:241-249).
     * One aggregate pass over all columns — not a per-column job. */
@@ -158,12 +167,18 @@ object SurveyPipeline {
           TextExprs.withClassification(d, col(q), s"${base}__cls")
         }
       case other =>
+        // one left join per question, by cleaned answer; each question's
+        // keys come from the base frame, never from the frame already
+        // joined for earlier questions (which would nest every step's plan
+        // into the next)
         bases.foldLeft(exploded) { case (d, (base, q)) =>
-          Classify.applyTo(d, col(q), lit(q), lit(industry), other,
-              sentimentCol = s"${base}__s", categoryCol = s"${base}__c")
-            .withColumn(s"${base}__cls",
-              struct(col(s"${base}__s").as("sentiment"), col(s"${base}__c").as("category")))
-            .drop(s"${base}__s", s"${base}__c")
+          val labels = other.classify(answerKeys(dfNa, industry, Seq(q)))
+            .where(col("industry") === industry && col("question") === q)
+            .select(col("answer").as("_g_answer"),
+              struct(col("sentiment"), col("category")).as(s"${base}__cls"))
+          d.withColumn("_g_answer", TextExprs.cleanText(col(q)))
+            .join(labels, Seq("_g_answer"), "left")
+            .drop("_g_answer")
         }
     }
 
@@ -226,11 +241,21 @@ object SurveyPipeline {
       .where(col("rank") <= k)
   }
 
-  /** O14/O18 — data sink: partition the wide table by product (the scalable
-    * analog of one-sheet-per-product) + the summary alongside. */
-  def writeReport(wide: DataFrame, summary: DataFrame, outDir: String): Unit = {
+  /** O14/O18 — data sink: the wide table partitioned by product (the
+    * scalable analog of one-sheet-per-product), written once, and the
+    * summary alongside — computed from the WRITTEN wide table, so it re-runs
+    * none of the wide frame's lineage (classification included) and counts
+    * exactly the labels the wide table holds. Returns (wide, summary) as
+    * read back; the wide table with the schema and column order it was
+    * written with, since partition discovery alone would type a product
+    * named "007" as the integer 7 and move Product last. */
+  def writeReport(wide: DataFrame, outDir: String): (DataFrame, DataFrame) = {
+    val spark = wide.sparkSession
     wide.write.mode("overwrite").partitionBy("Product").parquet(s"$outDir/wide")
-    summary.write.mode("overwrite").parquet(s"$outDir/summary")
+    val written = spark.read.schema(wide.schema).parquet(s"$outDir/wide")
+      .select(wide.columns.map(c => col("`" + c.replace("`", "``") + "`")): _*)
+    buildSummary(written).write.mode("overwrite").parquet(s"$outDir/summary")
+    (written, spark.read.parquet(s"$outDir/summary"))
   }
 
   /** O18 — the reference's Excel report (survey_analysis.py:370-446), on the

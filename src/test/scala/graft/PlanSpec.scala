@@ -812,4 +812,64 @@ class PlanSpec extends SparkSpec {
     val optimized = spark.sql("SELECT simhash('a b c') AS s").queryExecution.optimizedPlan.toString
     assert(!optimized.contains("simhash"), s"expected folded literal, got:\n$optimized")
   }
+
+  /** CSV relations among the leaves of a logical plan. */
+  private def csvScans(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
+    p.collect { case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation }
+      .count {
+        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          fs.fileFormat.isInstanceOf[org.apache.spark.sql.execution.datasources.csv.CSVFileFormat]
+        case _ => false
+      }
+
+  /** A 5-question survey CSV; returns its directory. */
+  private def surveyCsv(dir: String): String = {
+    val s = spark; import s.implicits._
+    Seq(("a@x.com", "Ana", "Alpha,Beta", "I love it", "too expensive", "ok", "late", "fine"),
+        ("b@x.com", "Bo", "Alpha", "n/a", "great support", "ok", "fast", "meh"))
+      .toDF("Email", "Name", "Products", "Q1", "Q2", "Q3", "Q4", "Q5")
+      .write.mode("overwrite").option("header", "true").csv(dir)
+    dir
+  }
+
+  test("SurveyMain writes its wide frame from exactly one CSV scan") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import scala.jdk.CollectionConverters._
+    val base = "target/tmp/plan_survey_main"
+    val csv = surveyCsv(s"$base/in")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def wideWrites: Seq[QueryExecution] = seen.asScala.toSeq.filter(_.optimizedPlan.exists {
+      case c: InsertIntoHadoopFsRelationCommand => c.outputPath.getName == "wide"
+      case _ => false
+    })
+    spark.listenerManager.register(listener)
+    val wide =
+      try {
+        SurveyMain.run(spark, csv, "retail", s"$base/out", s"$base/cache.parquet", runSummary = false)
+        val deadline = System.nanoTime() + 30e9.toLong // listener delivery is asynchronous
+        while (wideWrites.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+        wideWrites
+      } finally spark.listenerManager.unregister(listener)
+    assert(wide.length == 1, s"expected one wide write, saw ${wide.length}")
+    assert(csvScans(wide.head.optimizedPlan) == 1, wide.head.optimizedPlan.toString.take(3000))
+  }
+
+  test("analyzeWide's cache-join classify stays linear in questions: <= 1 + 2 * 5 source leaves") {
+    val df = graft.operators.SurveyPipeline.readSurveyCsv(spark, surveyCsv("target/tmp/plan_analyze_wide/in"))
+    val s = spark; import s.implicits._
+    val cache = Seq(("retail", "Q1", "I love it", "Negative", "Cached"))
+      .toDF("industry", "question", "answer", "sentiment", "category")
+    val wide = graft.operators.SurveyPipeline.analyzeWide(df, "retail",
+      new graft.operators.CacheJoinClassifier(cache, graft.operators.DemoAnswerClassifier))
+    val n = csvScans(wide.queryExecution.optimizedPlan)
+    assert(n >= 1 && n <= 1 + 2 * 5, s"$n CSV leaves in the optimized plan")
+    // the cached label still wins over the classifier
+    assert(wide.where($"Q1_Answer" === "I love it").select("Q1_Sentiment").as[String].collect().toSet ==
+      Set("Negative"))
+  }
 }

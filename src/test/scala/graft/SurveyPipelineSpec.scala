@@ -140,7 +140,7 @@ class SurveyPipelineSpec extends SparkSpec {
     val wide = SurveyPipeline.analyzeWide(surveyDf, "retail", faithfulIds = true)
     val summary = SurveyPipeline.buildSummary(wide)
     val out = "target/tmp/report"
-    SurveyPipeline.writeReport(wide, summary, out)
+    SurveyPipeline.writeReport(wide, out)
     val parts = new java.io.File(s"$out/wide").listFiles()
     assert(parts.exists(_.getName.startsWith("Product=")))
     val wideBack = spark.read.parquet(s"$out/wide")
